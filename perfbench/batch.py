@@ -1,18 +1,24 @@
 """Closed-loop batch workloads: one client runs ``__spark_entry__``
-queries back to back at ``local[4]`` over seeded sf0.01 tables.
+queries back to back at ``local[4]`` over the repository's sf0.01 test
+data (read only; ``scripts/oracle_manifest.py``'s ``SF_DIR``, the data
+the oracle manifest is pinned to).
 
 Per run:
 
 1. Correctness, untimed: each query runs once to pandas and is compared
    with its DuckDB ``oracle_sql()`` by ``scripts/check_oracle.py``'s
    ``audit_types`` and ``compare``. This is also the query's warm-up
-   (whole-stage codegen, JIT).
-2. Timed window of ``--seconds``: passes over the queries in a
+   (whole-stage codegen, JIT), followed by ``WARM_PASSES`` untimed
+   passes.
+2. Timed window of ``--seconds``: whole passes over the queries in a
    seed-shuffled order, each execution being the query function plus a
    ``noop``-sink write (``bench.py``'s ``run_query``), until the window
-   is over and every query ran ``MIN_SAMPLES`` times.
-   ``batch_total_s`` is the sum over queries of each query's median
-   wall; ``latency_p50_s`` the median over all executions.
+   is over and at least ``MIN_SAMPLES`` passes ran. The window ends
+   only at a pass boundary, so every query has the same number of
+   executions; a pass past ``MIN_SAMPLES`` starts only if one as long
+   as the last still ends inside the window. ``batch_total_s`` is the sum over queries of each
+   query's median wall; ``latency_p50_s`` the median of those per-query
+   medians, so neither depends on the mix of executions.
 
 A traced run (``--trace 1``) has the event log on from the start and
 alternates traced passes (layer spans installed) with untraced ones for
@@ -31,14 +37,22 @@ import time
 from collections import defaultdict
 from concurrent.futures import ThreadPoolExecutor
 
-import datagen
 import layers
 from harness import CORES, log, tail
+from oracle_manifest import SF_DIR
 
-# The tables are the same on every run, like the repository's own test
-# data (seed 42); the run's seed decides the query order.
-TABLE_SEED = 42
-MIN_SAMPLES = 2  # timed executions per query, however short the window
+# The tables are the same on every run; the run's seed decides the
+# query order.
+TINY_SF_DIR = os.path.join(os.path.dirname(SF_DIR), "sf0.001")
+# Timed passes, however short the window. Three, so that each query's
+# median drops one slow pass; with two, the median is a mean, and a run
+# whose pass count fell from three to two read up to 1.7x slower.
+MIN_SAMPLES = 3
+# Untimed passes between the oracle checks and the window. The checks
+# run each query once to pandas; the operator queries are short, and
+# without one more pass their noop-sink executions were still speeding
+# up by about 20% from the first timed pass to the third.
+WARM_PASSES = {"llm_sf001": 0, "operator_sf001": 1}
 
 # Each workload stresses different layers; see BENCHMARK.json for why.
 QUERIES = {
@@ -98,17 +112,13 @@ def check_all(b, order, qs, sf_dir: str) -> bool:
         con.close()
 
 
-def one_pass(b, order, qs, sf_dir: str, counts, t_end=None) -> list[tuple]:
-    """Run each query once, in order; stop early once ``t_end`` has
-    passed and every query has ``MIN_SAMPLES`` executions. One tuple
-    per execution: ``(name, wall, build_s, exec_s, wall_t0,
-    wall_t_build, wall_t_end, job_group)``."""
+def one_pass(b, order, qs, sf_dir: str, counts) -> list[tuple]:
+    """Run each query once, in order. One tuple per execution:
+    ``(name, wall, build_s, exec_s, wall_t0, wall_t_build, wall_t_end,
+    job_group)``."""
     sc = b.spark.sparkContext
     done = []
     for name in order:
-        if t_end is not None and time.perf_counter() >= t_end and min(
-                counts[q] for q in order) >= MIN_SAMPLES:
-            break
         group = f"perfbench:{name}:{counts[name]}"
         counts[name] += 1
 
@@ -128,27 +138,33 @@ def one_pass(b, order, qs, sf_dir: str, counts, t_end=None) -> list[tuple]:
     return done
 
 
-def timed(b, order, qs, sf_dir: str) -> list[tuple]:
-    """The closed loop of an untraced run."""
-    counts: dict[str, int] = defaultdict(int)
+def timed(b, order, qs, sf_dir: str, counts) -> list[tuple]:
+    """The closed loop of an untraced run: ``MIN_SAMPLES`` passes, then
+    another only while one as long as the last still fits in the window,
+    so that the pass count (and with it how warm the medians are) does
+    not flip from run to run when a pass takes about a third of it."""
     t_end = time.perf_counter() + b.seconds
     samples: list[tuple] = []
-    while not b.dead and not (time.perf_counter() >= t_end and min(
-            counts[q] for q in order) >= MIN_SAMPLES):
-        samples += one_pass(b, order, qs, sf_dir, counts, t_end)
-    missing = sum(max(0, MIN_SAMPLES - counts[q]) for q in order)
+    n = 0
+    last = 0.0
+    while not b.dead and (
+            n < MIN_SAMPLES or time.perf_counter() + last <= t_end):
+        p0 = time.perf_counter()
+        samples += one_pass(b, order, qs, sf_dir, counts)
+        last = time.perf_counter() - p0
+        n += 1
+    missing = len(order) * max(0, MIN_SAMPLES - n)
     if missing:
         b.fail("executions the dead JVM did not run", missing)
     return samples
 
 
-def alternating(b, order, qs, sf_dir: str, spans):
+def alternating(b, order, qs, sf_dir: str, spans, counts):
     """The closed loop of a traced run: traced and untraced passes in
     turn until each kind has run ``--seconds`` and ``MIN_SAMPLES``
     passes."""
     import __spark_entry__ as entry
 
-    counts: dict[str, int] = defaultdict(int)
     traced: list[tuple] = []
     plain: list[tuple] = []
     spent = [0.0, 0.0]
@@ -171,25 +187,29 @@ def alternating(b, order, qs, sf_dir: str, spans):
     return traced, plain
 
 
-def per_query_median(samples: list[tuple], value) -> float:
-    """Sum over queries of the median of ``value(sample)``."""
+def query_medians(samples: list[tuple], value) -> list[float]:
+    """Each query's median of ``value(sample)``."""
     by_q: dict[str, list[float]] = defaultdict(list)
     for s in samples:
         by_q[s[0]].append(value(s))
-    return sum(statistics.median(v) for v in by_q.values())
+    return [statistics.median(v) for v in by_q.values()]
+
+
+def per_query_median(samples: list[tuple], value) -> float:
+    """Sum over queries of the median of ``value(sample)``."""
+    return sum(query_medians(samples, value))
 
 
 def traced_layers(samples, spans, jobs) -> dict[str, float]:
     """Layer and engine numbers of each traced execution, as per-query
     medians summed over queries."""
-    job_times = sorted(j["submit"] for j in jobs)
     by_group: dict[str, list[dict]] = defaultdict(list)
     for j in jobs:
         by_group[j["group"]].append(j)
     per_exec = []
     for _, _, build_s, exec_s, w0, w1, w2, group in samples:
         gj = by_group.get(group, [])
-        m = layers.layer_totals(spans.records, w0, w2, job_times)
+        m = layers.layer_totals(spans.records, w0, w2, gj)
         m.update(layers.engine_totals(
             [j for j in gj if j["submit"] >= w1], exec_s, CORES))
         m["driver.build_s"] = build_s
@@ -209,8 +229,9 @@ def end_to_end(samples: list[tuple]) -> tuple[dict, dict]:
     """``(end_to_end, latency_tail)`` metrics of a set of executions."""
     walls = [s[1] for s in samples] or [0.0]
     tail_v, tail_p = tail(walls)
-    e2e = {"batch_total_s": per_query_median(samples, lambda s: s[1]),
-           "latency_p50_s": statistics.median(walls)}
+    medians = query_medians(samples, lambda s: s[1]) or [0.0]
+    e2e = {"batch_total_s": sum(medians),
+           "latency_p50_s": statistics.median(medians)}
     log(f"batch_total_s {e2e['batch_total_s']:.4f}; latency p50 "
         f"{e2e['latency_p50_s']:.4f}s, p{tail_p:.1f} {tail_v:.4f}s over "
         f"{len(samples)} executions")
@@ -222,24 +243,30 @@ def run(b, spans):
     """Run the workload; return ``(end_to_end, per_layer, correct)``."""
     import __spark_entry__ as entry
 
-    sf = 0.001 if b.tiny else 0.01
-    sf_dir = os.path.join(b.work, f"sf{sf}")
-    datagen.write_tables(sf_dir, sf, TABLE_SEED)
+    sf_dir = TINY_SF_DIR if b.tiny else SF_DIR
     qs = entry.queries()
     order = list(QUERIES[b.args.workload])
     random.Random(b.seed).shuffle(order)
     t0 = time.perf_counter()
     correct = check_all(b, order, qs, sf_dir)
     log(f"oracle checks + warm-up {time.perf_counter() - t0:.2f}s")
+    counts: dict[str, int] = defaultdict(int)  # executions per query
+    for _ in range(WARM_PASSES[b.args.workload]):
+        one_pass(b, order, qs, sf_dir, counts)
     if b.dead:
         return {}, {}, False
     b.reset_peak_rss()
     if spans is None:
-        e2e, _ = end_to_end(timed(b, order, qs, sf_dir))
+        samples = timed(b, order, qs, sf_dir, counts)
+        peak_rss = b.peak_rss_mb()
+        e2e, _ = end_to_end(samples)
+        e2e["peak_rss_mb"] = peak_rss
         return e2e, None, correct
 
-    traced, plain = alternating(b, order, qs, sf_dir, spans)
+    traced, plain = alternating(b, order, qs, sf_dir, spans, counts)
+    peak_rss = b.peak_rss_mb()
     e2e, per_layer = end_to_end(plain)
+    e2e["peak_rss_mb"] = peak_rss
     if b.dead:
         return e2e, per_layer, correct
     b.flush_event_log()

@@ -1,167 +1,25 @@
-"""Seeded inputs for the benchmark.
+"""Seeded inputs of the streaming workload.
 
-``write_tables`` writes the ten driver tables (``region`` .. ``events``,
-``documents``, ``embeddings``) with the schemas and value ranges of the
-repository's scale-factor test data, so every ``__spark_entry__`` query
-and its DuckDB ``oracle_sql()`` twin run on them unchanged.
-``StreamDocs`` and ``stream_events`` make the file-per-trigger inputs
-of the streaming workload: document rows with a controlled duplicate
-share and Zipf-skewed tokens, and event rows whose event time keeps
+The batch workloads read the repository's own test data (see
+``batch.py``); only the file-per-trigger stream is generated here.
+``StreamDocs`` makes document rows with a controlled duplicate share
+and Zipf-skewed tokens; ``stream_events`` makes event rows, in the
+schema of the test data's ``events`` table, whose event time keeps
 advancing so tumbling windows close.
 
 Everything derives from ``numpy.random.default_rng(seed)``: the same
-seed and scale give byte-identical tables.
+seed gives the same rows.
 """
 
 from __future__ import annotations
-
-import os
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-DOC_WORDS = (
-    "the a join hash row batch scan column customer filter small slow "
-    "merge order vector line table data agg value key stream window spark "
-    "part group big sort query fast"
-).split()
-LANGS = np.array(["en", "es", "de", "fr", "zh"])
-LANG_P = [0.44, 0.14, 0.14, 0.14, 0.14]
 EVENT_TYPES = np.array(["signup", "error", "click", "view", "purchase"])
 EVENT_EPOCH = np.datetime64("2024-01-01T00:00:00", "us")
-
-
-def _write(df: pd.DataFrame, path: str) -> None:
-    pq.write_table(pa.Table.from_pandas(df, preserve_index=False), path)
-
-
-def _days(rng, n: int, start: str, n_days: int) -> np.ndarray:
-    base = np.datetime64(start, "D")
-    return (base + rng.integers(0, n_days, n)).astype("datetime64[us]")
-
-
-def _money(rng, lo: float, hi: float, n: int) -> np.ndarray:
-    return np.round(rng.uniform(lo, hi, n), 2)
-
-
-def _doc_texts(rng, n: int) -> list[str]:
-    """Prose over a 30-word vocabulary; about one document in twelve is
-    a copy of an earlier one with a ``dup`` marker appended, so the
-    near-duplicate families find pairs."""
-    words = np.array(DOC_WORDS)
-    lens = rng.integers(10, 90, n)
-    texts: list[str] = []
-    for i in range(n):
-        if i > 10 and rng.random() < 0.08:
-            src = texts[int(rng.integers(0, i))]
-            texts.append(src + " dup" * int(rng.integers(1, 3)))
-        else:
-            texts.append(" ".join(words[rng.integers(0, len(words), lens[i])]))
-    return texts
-
-
-def write_tables(out: str, sf: float, seed: int) -> None:
-    """Write the driver tables for scale factor ``sf`` into ``out``."""
-    rng = np.random.default_rng(seed)
-    os.makedirs(out, exist_ok=True)
-    n_cust = max(150, int(150_000 * sf))
-    n_supp = max(10, int(10_000 * sf))
-    n_part = max(200, int(200_000 * sf))
-    n_ord = max(1500, int(1_500_000 * sf))
-    n_ev = max(1000, int(1_000_000 * sf))
-    n_users = max(15, n_cust // 10)
-    n_docs = max(500, int(50_000 * sf))
-    n_vecs = max(500, int(20_000 * sf))
-
-    _write(pd.DataFrame({
-        "r_regionkey": np.arange(5, dtype=np.int32),
-        "r_name": ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"],
-    }), f"{out}/region.parquet")
-    _write(pd.DataFrame({
-        "n_nationkey": np.arange(25, dtype=np.int32),
-        "n_name": [f"NATION_{i}" for i in range(25)],
-        "n_regionkey": (np.arange(25) % 5).astype(np.int32),
-    }), f"{out}/nation.parquet")
-    _write(pd.DataFrame({
-        "c_custkey": np.arange(n_cust, dtype=np.int64),
-        "c_name": [f"Customer#{i:09d}" for i in range(n_cust)],
-        "c_nationkey": rng.integers(0, 25, n_cust).astype(np.int32),
-        "c_acctbal": _money(rng, -999.99, 9999.99, n_cust),
-        "c_mktsegment": rng.choice(
-            ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"],
-            n_cust),
-    }), f"{out}/customer.parquet")
-    _write(pd.DataFrame({
-        "s_suppkey": np.arange(n_supp, dtype=np.int64),
-        "s_name": [f"Supplier#{i:09d}" for i in range(n_supp)],
-        "s_nationkey": rng.integers(0, 25, n_supp).astype(np.int32),
-        "s_acctbal": _money(rng, -999.99, 9999.99, n_supp),
-    }), f"{out}/supplier.parquet")
-    adjs = ["small", "red", "blue", "hot", "old", "large", "green", "shiny"]
-    nouns = ["ring", "widget", "bolt", "gear", "gizmo", "plate", "rod", "nut"]
-    retail = np.round(900.0 + (np.arange(n_part) % 1000) * 0.1, 1)
-    _write(pd.DataFrame({
-        "p_partkey": np.arange(n_part, dtype=np.int64),
-        "p_name": [f"{a} {b}" for a, b in zip(
-            rng.choice(adjs, n_part), rng.choice(nouns, n_part))],
-        "p_brand": [f"Brand#{b}" for b in rng.integers(1, 26, n_part)],
-        "p_type": rng.choice(
-            ["ECONOMY", "LARGE", "MEDIUM", "PROMO", "SMALL", "STANDARD"],
-            n_part),
-        "p_size": rng.integers(1, 51, n_part).astype(np.int32),
-        "p_retailprice": retail,
-    }), f"{out}/part.parquet")
-    _write(pd.DataFrame({
-        "o_orderkey": np.arange(n_ord, dtype=np.int64),
-        "o_custkey": rng.integers(0, n_cust, n_ord),
-        "o_orderstatus": rng.choice(["F", "O", "P"], n_ord),
-        "o_totalprice": _money(rng, 1000.0, 500_000.0, n_ord),
-        "o_orderdate": _days(rng, n_ord, "1995-01-01", 2400),
-        "o_orderpriority": rng.choice(
-            ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"],
-            n_ord),
-    }), f"{out}/orders.parquet")
-    n_li = 4 * n_ord
-    l_orderkey = np.sort(rng.integers(0, n_ord, n_li))
-    first = np.r_[True, l_orderkey[1:] != l_orderkey[:-1]]
-    run_start = np.maximum.accumulate(np.where(first, np.arange(n_li), 0))
-    l_partkey = rng.integers(0, n_part, n_li)
-    qty = rng.integers(1, 51, n_li).astype(np.float64)
-    _write(pd.DataFrame({
-        "l_orderkey": l_orderkey,
-        "l_partkey": l_partkey,
-        "l_suppkey": rng.integers(0, n_supp, n_li),
-        "l_linenumber": (np.arange(n_li) - run_start + 1).astype(np.int32),
-        "l_quantity": qty,
-        "l_extendedprice": np.round(
-            qty * retail[l_partkey] * rng.uniform(0.05, 2.3, n_li), 2),
-        "l_discount": rng.integers(0, 11, n_li) / 100.0,
-        "l_tax": rng.integers(0, 9, n_li) / 100.0,
-        "l_returnflag": rng.choice(["A", "N", "R"], n_li),
-        "l_linestatus": rng.choice(["F", "O"], n_li),
-        "l_shipdate": _days(rng, n_li, "1995-01-02", 2500),
-    }), f"{out}/lineitem.parquet")
-    _write(events_frame(rng, 0, n_ev, n_users, EVENT_EPOCH, 30 * 86400),
-           f"{out}/events.parquet")
-    texts = _doc_texts(rng, n_docs)
-    _write(pd.DataFrame({
-        "doc_id": np.arange(n_docs, dtype=np.int64),
-        "text": texts,
-        "lang": rng.choice(LANGS, n_docs, p=LANG_P),
-        "source": [f"src{i % 20}" for i in range(n_docs)],
-        "n_chars": np.array([len(t) for t in texts], dtype=np.int64),
-    }), f"{out}/documents.parquet")
-    label = rng.integers(0, 10, n_vecs)
-    centers = rng.normal(0.0, 1.0, (10, 64))
-    vecs = rng.normal(0.0, 1.0, (n_vecs, 64)) + 0.15 * centers[label]
-    vecs /= np.linalg.norm(vecs, axis=1, keepdims=True)
-    _write(pd.DataFrame({
-        "vec_id": np.arange(n_vecs, dtype=np.int64),
-        "embedding": list(vecs.astype(np.float32)),
-        "label": label.astype(np.int32),
-    }), f"{out}/embeddings.parquet")
 
 
 def events_frame(rng, first_id: int, n: int, n_users: int,

@@ -2,13 +2,18 @@
 
 - :class:`Spans` wraps the public functions (and public methods of
   public classes) of each layer module and records one span per call:
-  name, layer, start, end and parent. Patching replaces the attribute
+  name, layer, start, end, parent and the Spark job group it ran in.
+  Patching replaces the attribute
   in the defining module and in every package module that bound the
   same object by ``from ... import``, so calls resolve to the wrapper
   wherever they come from. Spans stay in memory until written out.
 - :func:`read_event_log` parses the Spark event log of a traced run
   into one record per job: its group, submission time, and the summed
-  metrics of its tasks.
+  metrics of its tasks. A job's group is its job group, plus the
+  micro-batch id for the jobs of a streaming query (Spark gives each
+  query its run id as job group and tags every job with its batch), so
+  a span's jobs are those of its own query and micro-batch even when
+  several queries run at once.
 - :func:`make_progress_listener` builds a ``StreamingQueryListener``
   that keeps every progress event, for the trigger-phase breakdown.
 
@@ -70,11 +75,27 @@ LAYERS = {
 }
 
 
+BATCH_ID_KEY = "streaming.sql.batchId"  # Spark's micro-batch job property
+
+
+def group_key(job_group: str | None, batch_id: str | None) -> str:
+    return f"{job_group or ''}/{batch_id}" if batch_id else job_group or ""
+
+
+def current_group(sc) -> str:
+    """The group of the jobs this thread submits now."""
+    return group_key(sc.getLocalProperty("spark.jobGroup.id"),
+                     sc.getLocalProperty(BATCH_ID_KEY))
+
+
 class Spans:
-    """Call spans at the layer boundaries, kept in memory."""
+    """Call spans at the layer boundaries, kept in memory. Once
+    ``sc`` is set, each span also records the job group it ran in."""
 
     def __init__(self) -> None:
-        self.records: list[tuple] = []  # (id, name, layer, t0, t1, parent)
+        # (id, name, layer, t0, t1, parent, group)
+        self.records: list[tuple] = []
+        self.sc = None
         self._local = threading.local()
         self._lock = threading.Lock()
         self._next_id = 0
@@ -93,13 +114,15 @@ class Spans:
                 sid = spans._next_id
             parent = stack[-1] if stack else 0
             stack.append(sid)
+            group = current_group(spans.sc) if spans.sc is not None else ""
             t0 = time.time()
             try:
                 return fn(*args, **kwargs)
             finally:
                 t1 = time.time()
                 stack.pop()
-                spans.records.append((sid, name, layer, t0, t1, parent))
+                spans.records.append(
+                    (sid, name, layer, t0, t1, parent, group))
 
         return traced
 
@@ -151,23 +174,28 @@ class Spans:
 
     def dump(self, path: str) -> None:
         with open(path, "w") as f:
-            for sid, name, layer, t0, t1, parent in self.records:
+            for sid, name, layer, t0, t1, parent, group in self.records:
                 f.write(json.dumps({"id": sid, "name": name, "layer": layer,
-                                    "start": t0, "end": t1,
-                                    "parent": parent}) + "\n")
+                                    "start": t0, "end": t1, "parent": parent,
+                                    "group": group}) + "\n")
 
 
 def layer_totals(records: list[tuple], t0: float, t1: float,
-                 job_times: list[float]) -> dict[str, float]:
+                 jobs: list[dict]) -> dict[str, float]:
     """``<layer>.s``, ``.calls`` and ``.jobs`` for spans that start in
     ``[t0, t1]``. A span counts toward ``.s`` and ``.jobs`` only when no
     ancestor belongs to the same layer, so recursion inside a layer is
-    not counted twice; ``.jobs`` counts Spark jobs submitted inside it
-    (``job_times`` sorted, seconds)."""
+    not counted twice; ``.jobs`` counts the Spark jobs of the span's own
+    group submitted inside it."""
+    job_times: dict[str, list[float]] = defaultdict(list)
+    for j in jobs:
+        job_times[j["group"]].append(j["submit"])
+    for v in job_times.values():
+        v.sort()
     inside = [r for r in records if t0 <= r[3] <= t1]
     by_id = {r[0]: r for r in inside}
     out: dict[str, float] = defaultdict(float)
-    for sid, name, layer, s0, s1, parent in inside:
+    for sid, name, layer, s0, s1, parent, group in inside:
         out[f"{layer}.calls"] += 1
         p = by_id.get(parent)
         while p is not None and p[2] != layer:
@@ -175,8 +203,9 @@ def layer_totals(records: list[tuple], t0: float, t1: float,
         if p is not None:
             continue
         out[f"{layer}.s"] += s1 - s0
-        out[f"{layer}.jobs"] += (bisect.bisect_right(job_times, s1)
-                                 - bisect.bisect_left(job_times, s0))
+        times = job_times.get(group, [])
+        out[f"{layer}.jobs"] += (bisect.bisect_right(times, s1)
+                                 - bisect.bisect_left(times, s0))
     return out
 
 
@@ -216,7 +245,8 @@ def read_event_log(log_dir: str) -> list[dict]:
                     jid = ev["Job ID"]
                     props = ev.get("Properties") or {}
                     jobs[jid] = defaultdict(float, {
-                        "group": props.get("spark.jobGroup.id", ""),
+                        "group": group_key(props.get("spark.jobGroup.id"),
+                                           props.get(BATCH_ID_KEY)),
                         "submit": ev["Submission Time"] / 1e3,
                         "stages": float(len(ev["Stage IDs"])),
                     })

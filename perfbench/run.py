@@ -11,14 +11,14 @@ record ``{"correct", "attempted", "failed", "metrics"}``: with
 
 Workloads:
 
-- ``llm_sf001``, ``operator_sf001``: closed loop, one client, seeded
-  sf0.01 tables (``batch.py``).
+- ``llm_sf001``, ``operator_sf001``: closed loop, one client, the
+  repository's sf0.01 test data (``batch.py``).
 - ``stream_twins``: open loop, three streaming twins fed one parquet
   file per trigger on a fixed schedule (``stream.py``).
 
 The run sizes the Spark driver heap as a fixed fraction of ``MemTotal``
 through ``SPARK_GRAFT_DRIVER_MEM`` and runs Spark at ``local[4]``.
-Inputs, Spark scratch space and event logs live under
+Stream inputs, Spark scratch space and event logs live under
 ``perfbench/.work`` and are removed at exit. A JVM that dies mid-run
 turns every remaining operation into a failure; the record is still
 printed.
@@ -109,6 +109,7 @@ def main() -> int:
         setup_s = process_age()
         if spans:
             spans.uninstall()
+            spans.sc = b.spark.sparkContext
         log(f"setup {setup_s:.3f}s, heap {b.heap}, local[{CORES}], "
             f"seed {args.seed}, workload {args.workload}")
         runner = stream.run if args.workload == "stream_twins" else batch.run
@@ -120,7 +121,6 @@ def main() -> int:
             b.fail("JVM died outside an operation")
             e2e, per_layer, correct = {}, {}, False
         e2e["setup_s"] = setup_s
-        e2e["peak_rss_mb"] = b.peak_rss_mb()
         host = {"cores": CORES, "driver_heap": b.heap}
         if b.jvm_alive():
             try:

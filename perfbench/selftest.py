@@ -1,10 +1,10 @@
 #!/usr/bin/env python3
 """Fast self-test of the benchmark: checks ``BENCHMARK.json`` against
 the limits its runner relies on, then runs every workload once untraced
-and once traced on tiny inputs (sf0.001 tables, two stream batches per
-twin) and checks each result line: its keys, that it is correct with
-no failed operation, and that it carries exactly the metric names and
-units ``BENCHMARK.json`` declares.
+and once traced on tiny inputs (sf0.001 tables, one timed stream file
+per twin after the warm-up files) and checks each result line: its
+keys, that it is correct with no failed operation, and that it carries
+exactly the metric names and units ``BENCHMARK.json`` declares.
 
     python3 perfbench/selftest.py        # from the root of a checkout
 

@@ -2,8 +2,8 @@
 in one Spark application, as the tasks of one deployment do.
 
 Each twin reads its own directory with ``maxFilesPerTrigger=1``. A
-generator writes one seeded parquet file per twin on a fixed schedule
-(each twin at its own interval, the twins offset from each other) that
+generator writes one seeded parquet file per twin every ``INTERVAL_S``
+seconds, the twins offset from each other, on a fixed schedule that
 does not slow when the engine does. A file's latency runs from its
 scheduled write to the commit of the micro-batch that consumed it, so
 queue wait behind a slow batch counts. The first ``WARM_FILES`` files
@@ -21,6 +21,11 @@ Twins:
 
 After the window each twin's final state is compared with its batch
 one-shot over the same files.
+
+Spark runs each query's micro-batches under the query's run id as job
+group and tags their jobs with the batch id; a traced run counts a
+span's jobs by that group (``layers.current_group``), so a twin's
+spans do not pick up the jobs of the twins running beside it.
 """
 
 from __future__ import annotations
@@ -38,12 +43,13 @@ import datagen
 import layers
 from harness import CORES, log, tail
 
-# Seconds between two files of a twin: about twice the twin's batch
-# time when it runs alone at ROWS rows, so the three together stay
-# below capacity.
-INTERVAL_S = {"approx_distinct": 3.0, "bloom_dedup": 3.0,
-              "hourly_stats": 3.0}
-TWINS = tuple(INTERVAL_S)
+# Seconds between two files of a twin: about three times the slowest
+# twin's (bloom_dedup's) warm batch time at ROWS rows with the other two
+# running beside it, so that no twin queues behind its own last batch
+# even when the host slows. At 3 s bloom_dedup runs at about 90% of
+# its capacity, and its queue wait makes the latency swing between runs.
+INTERVAL_S = 5.0
+TWINS = ("approx_distinct", "bloom_dedup", "hourly_stats")
 ROWS = 100  # rows per file
 # Untimed files at the start of each twin: the first compiles its plans,
 # the second lets the JIT catch up with the new code paths.
@@ -127,17 +133,12 @@ def commit_time(p: dict) -> float:
     return start + p["durationMs"]["triggerExecution"] / 1e3
 
 
-def n_files(b, name: str) -> int:
-    """Timed files of a twin."""
-    return 1 if b.tiny else max(1, int(b.seconds / INTERVAL_S[name]))
-
-
 def make_twins(b, root: str) -> list[Twin]:
     rows = 20 if b.tiny else ROWS
+    n = WARM_FILES + (1 if b.tiny else max(1, int(b.seconds / INTERVAL_S)))
     docs = datagen.StreamDocs(b.seed)
     twins = []
     for name in TWINS:
-        n = n_files(b, name) + WARM_FILES
         if name == "hourly_stats":
             frames = datagen.stream_events(b.seed, n, rows)
         else:
@@ -148,7 +149,8 @@ def make_twins(b, root: str) -> list[Twin]:
 
 def run_phase(b, tag: str, listener=None) -> dict:
     """Start the twins, warm them up, feed their files on the schedule,
-    drain, and return what was measured."""
+    drain, and return what was measured. ``peak_rss_mb`` covers the
+    timed window and the drain."""
     spark = b.spark
     twins = make_twins(b, os.path.join(b.work, f"stream-{tag}"))
     if listener is not None:
@@ -169,8 +171,7 @@ def run_phase(b, tag: str, listener=None) -> dict:
     t0 = time.time() + 0.5
     plan = []
     for j, t in enumerate(twins):
-        step = INTERVAL_S[t.name]
-        t.due = [t0 + j * step / len(twins) + i * step
+        t.due = [t0 + (j / len(twins) + i) * INTERVAL_S
                  for i in range(len(t.frames) - WARM_FILES)]
         plan += [(due, j, k) for k, due in enumerate(t.due, WARM_FILES)]
     plan.sort()
@@ -190,24 +191,24 @@ def run_phase(b, tag: str, listener=None) -> dict:
     t1 = time.time()
     log(f"stream {tag}: drained {t1 - plan[-1][0]:.2f}s after the last file")
     settle(b, live, listener, t1 + 5.0)
+    peak_rss = b.peak_rss_mb()
 
-    progress, latency, backlog = [], [], 0
+    progress, latency, backlog = [], {}, 0
     for t in twins:
         if t.query is not None and b.jvm_alive():
             if not t.query.isActive:
                 b.fail(f"{t.name} query died: {t.query.exception()}")
             progress += t.progress()
         batches = t.data_batches(progress) if t.query is not None else []
-        for k, due in enumerate(t.due, WARM_FILES):
-            if k < len(batches):
-                latency.append(commit_time(batches[k]) - due)
-            else:
-                backlog += 1
+        latency[t.name] = [commit_time(batches[k]) - due
+                           for k, due in enumerate(t.due, WARM_FILES)
+                           if k < len(batches)]
+        backlog += len(t.due) - len(latency[t.name])
     b.attempted += len(plan)
     b.failed += backlog
     return {"tag": tag, "twins": twins, "latency": latency,
             "backlog": backlog, "late": late, "t0": t0, "t1": t1,
-            "progress": progress}
+            "progress": progress, "peak_rss_mb": peak_rss}
 
 
 def settle(b, live: list[Twin], listener, deadline: float) -> None:
@@ -353,19 +354,24 @@ def run(b, spans):
     stop_queries(b, a)
     correct = not b.dead and check_twins(b, a)
     log("stream a: checks done")
-    lat = a["latency"] or [0.0]
-    tail_v, tail_p = tail(lat)
+    lat = [x for v in a["latency"].values() for x in v]
+    tail_v, tail_p = tail(lat or [0.0])
     e2e = {
         "batch_total_s": sum(p50_batch_s(t, a["progress"])
                              for t in a["twins"] if t.query is not None),
-        "latency_p50_s": statistics.median(lat),
+        # the median twin's median, so that it does not depend on where
+        # the three twins' latencies happen to interleave
+        "latency_p50_s": statistics.median(
+            [statistics.median(v) for v in a["latency"].values() if v]
+            or [0.0]),
+        "peak_rss_mb": a["peak_rss_mb"],
     }
     log(f"batch_total_s {e2e['batch_total_s']:.4f}; latency p50 "
         f"{e2e['latency_p50_s']:.3f}s, p{tail_p:.1f} {tail_v:.3f}s over "
-        f"{len(a['latency'])} files; backlog {a['backlog']} files; "
+        f"{len(lat)} files; backlog {a['backlog']} files; "
         f"capacity {rows_in(a) / max(busy_s(a), 1e-9):.1f} rows/s")
     tail_layer = {"latency.tail_s": tail_v, "latency.tail_pct": tail_p,
-                  "latency.samples": float(len(a["latency"]))}
+                  "latency.samples": float(len(lat))}
     if spans is None or b.dead:
         return e2e, (tail_layer if spans is not None else None), correct
 
@@ -385,8 +391,7 @@ def run(b, spans):
             if win[0] <= j["submit"] <= win[1]]
     tb["progress"] = listener.events
     busy = busy_s(tb)
-    per_layer = layers.layer_totals(spans.records, *win,
-                                    sorted(j["submit"] for j in jobs))
+    per_layer = layers.layer_totals(spans.records, *win, jobs)
     per_layer.update(layers.engine_totals(jobs, busy, CORES))
     batches = [p for t in tb["twins"] if t.query is not None
                for p in timed_batches(t, listener.events)]

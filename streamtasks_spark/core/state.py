@@ -9,8 +9,21 @@ renames. The protocol:
   table path. A writer never modifies a committed segment — each
   ingest/rewrite creates a new one.
 - A single small pointer file ``_MANIFEST.json`` names the live
-  segment set (``{"version": N, "segments": [...]}``). Readers resolve
-  the table THROUGH the manifest; uncommitted segments are invisible.
+  segment set (``{"version": N, "segments": [...], "schema": {...}}``).
+  Readers resolve the table THROUGH the manifest; uncommitted segments
+  are invisible.
+- ``schema`` is the table's Spark schema (``StructType.jsonValue()``)
+  without its directory-partition column, recorded by every data
+  commit (:func:`replace_write`, :func:`append_write`,
+  :func:`replace_rows`). :func:`manifest_read` reads every segment
+  with it, so resolving a table launches no Spark job: inferring the
+  schema costs one footer-read job per segment, which on a table that
+  appends a segment per micro-batch grows with every batch. Partition
+  columns (``__cell=N/``) are still discovered from the directory
+  names, so they keep the types inference gives them. A manifest
+  written before the field existed has no ``schema``; the same reader
+  infers it once, from the first segment. Pointer-only manifests (an
+  index root naming its live epoch directory) carry none.
 - Commit = write the new manifest to a sibling temp file, fsync, then
   one atomic single-file replace (:func:`os.replace`). A crash at ANY
   point before the flip leaves the previous manifest — and therefore
@@ -55,6 +68,7 @@ import json
 import os
 import shutil
 import uuid
+from functools import reduce
 
 MANIFEST_NAME = "_MANIFEST.json"
 _SEG_PREFIX = "seg_"
@@ -66,8 +80,9 @@ def _manifest_file(path: str) -> str:
 
 
 def read_manifest(path: str) -> dict | None:
-    """The live manifest (``{"version": int, "segments": [str]}``), or
-    None when the table has never committed through the protocol."""
+    """The live manifest (``{"version": int, "segments": [str]}``, plus
+    ``"schema"`` on data tables), or None when the table has never
+    committed through the protocol."""
     try:
         with open(_manifest_file(path)) as f:
             return json.load(f)
@@ -91,18 +106,23 @@ def _flip(tmp: str, dst: str) -> None:
     os.replace(tmp, dst)
 
 
-def commit_segments(path: str, segments: list[str], *, gc: bool = True) -> None:
+def commit_segments(path: str, segments: list[str], *, schema=None,
+                    gc: bool = True) -> None:
     """Atomically point the manifest at exactly ``segments`` (REPLACE
-    semantics). Data must already be fully written. On success, sweeps
-    segment directories the new manifest no longer references —
-    superseded versions and crash orphans alike (single-owner
-    contract)."""
+    semantics), recording ``schema`` (a ``StructType``: every
+    segment's schema minus its partition column) when given. Data must
+    already be fully written. On success, sweeps segment directories
+    the new manifest no longer references — superseded versions and
+    crash orphans alike (single-owner contract)."""
     prev = read_manifest(path)
-    version = (prev["version"] if prev else 0) + 1
+    body = {"version": (prev["version"] if prev else 0) + 1,
+            "segments": list(segments)}
+    if schema is not None:
+        body["schema"] = schema.jsonValue()
     os.makedirs(path, exist_ok=True)
     tmp = os.path.join(path, f"{_TMP_PREFIX}{uuid.uuid4().hex[:8]}")
     with open(tmp, "w") as f:
-        f.write(json.dumps({"version": version, "segments": list(segments)}))
+        f.write(json.dumps(body))
         f.flush()
         os.fsync(f.fileno())
     _flip(tmp, _manifest_file(path))
@@ -110,13 +130,14 @@ def commit_segments(path: str, segments: list[str], *, gc: bool = True) -> None:
         gc_segments(path)
 
 
-def append_commit(path: str, new_names: list[str], *, gc: bool = True) -> None:
+def append_commit(path: str, new_names: list[str], *, schema=None,
+                  gc: bool = True) -> None:
     """Atomically extend the live segment set with ``new_names``
     (APPEND semantics — one pointer flip makes the whole batch of new
     segments visible at once)."""
     prev = read_manifest(path)
     base = prev["segments"] if prev else []
-    commit_segments(path, base + list(new_names), gc=gc)
+    commit_segments(path, base + list(new_names), schema=schema, gc=gc)
 
 
 def gc_segments(path: str) -> None:
@@ -144,26 +165,31 @@ def gc_segments(path: str) -> None:
 
 def manifest_read(spark, path: str):
     """DataFrame over the committed segments (None before the first
-    commit or when the live set is empty). Each segment reads with its
-    own ``basePath`` so directory-partitioned layouts (``__cell=N/``)
-    keep their partition column AND per-segment partition pruning;
-    segments then union by name. Snapshot isolation is structural:
-    segments are immutable, so the set resolved here cannot change
-    under the plan. Segment count is bounded by compaction (one
-    compact = one segment), keeping the union shallow."""
+    commit or when the live set is empty). Every segment reads with
+    the manifest's recorded schema, so no Spark job runs here; a
+    manifest without one infers it once, from the first segment. Each
+    segment reads with its own ``basePath`` so directory-partitioned
+    layouts (``__cell=N/``) keep their partition column AND
+    per-segment partition pruning; segments then union by name.
+    Snapshot isolation is structural: segments are immutable, so the
+    set resolved here cannot change under the plan. Segment count is
+    bounded by compaction (one compact = one segment), keeping the
+    union shallow."""
+    from pyspark.sql import DataFrame
+    from pyspark.sql.types import StructType
+
     m = read_manifest(path)
     if m is None or not m["segments"]:
         return None
-    parts = []
-    for name in m["segments"]:
-        seg = os.path.join(path, name)
-        parts.append(
-            spark.read.option("basePath", seg).parquet(seg)
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    segs = [os.path.join(path, name) for name in m["segments"]]
+    if "schema" in m:
+        schema = StructType.fromJson(m["schema"])
+    else:
+        schema = spark.read.option("basePath", segs[0]).parquet(segs[0]).schema
+    return reduce(DataFrame.unionByName, [
+        spark.read.schema(schema).option("basePath", seg).parquet(seg)
+        for seg in segs
+    ])
 
 
 def adopt_legacy(path: str) -> list[str]:
@@ -191,13 +217,31 @@ def adopt_legacy(path: str) -> list[str]:
     return [name]
 
 
-def replace_write(df, path: str, *, coalesce: int | None = None,
+def _data_schema(df, partition_by: str | None):
+    """The schema a manifest records for ``df``: the partition column
+    is left to directory discovery, as plain inference always did."""
+    from pyspark.sql.types import StructType
+
+    return StructType([f for f in df.schema.fields if f.name != partition_by])
+
+
+def _commit_replace(path: str, name: str, schema) -> None:
+    if read_manifest(path) is None:
+        # pre-manifest loose files are being REPLACED, not kept: fold
+        # them into an (unreferenced) segment so the flip's GC sweeps
+        # them instead of leaving them to shadow plain directory reads
+        adopt_legacy(path)
+    commit_segments(path, [name], schema=schema)
+
+
+def replace_write(df, path: str, *, partitions: int | None = None,
                   partition_by: str | None = None) -> None:
     """Write ``df`` as the table's new (sole) version: land a segment,
     flip the pointer, sweep the old version. The crash-safe successor
     of the ``write.mode('overwrite')``-then-rename-swap pattern — a
     crash anywhere before the flip leaves the previous version the
-    live one."""
+    live one. ``partitions`` caps the segment's file count (per
+    partition directory when ``partition_by`` is set)."""
     name, seg = new_segment(path)
     # repartition, NOT coalesce (r12, measured): every caller that asks
     # for file-count control here passes a codebook/sketch-sized frame,
@@ -208,18 +252,44 @@ def replace_write(df, path: str, *, coalesce: int | None = None,
     # at local[32]; same pathology on a cluster). repartition keeps the
     # slice evaluations parallel on the map side and funnels rows
     # through one reduce task: 0.6 s vs 5.2 s measured on a 32-row
-    # register table, bit-identical file contents either way.
-    w = df.repartition(coalesce) if coalesce else df
+    # register table. Row order within the file can differ between
+    # the two; every reader of these tables is row-order-insensitive.
+    w = df.repartition(partitions) if partitions else df
     writer = w.write
     if partition_by:
         writer = writer.partitionBy(partition_by)
     writer.parquet(seg)
-    if read_manifest(path) is None:
-        # pre-manifest loose files are being REPLACED, not kept: fold
-        # them into an (unreferenced) segment so the flip's GC sweeps
-        # them instead of leaving them to shadow plain directory reads
-        adopt_legacy(path)
-    commit_segments(path, [name])
+    _commit_replace(path, name, _data_schema(df, partition_by))
+
+
+def replace_rows(rows, schema, path: str) -> None:
+    """:func:`replace_write` for a small driver-resident row list (a
+    sketch's registers or counters): the rows go straight from the
+    driver into the new segment as ONE parquet file, with the physical
+    types and the Spark schema metadata Spark's own writer puts there,
+    then commit through the same pointer flip. No Spark job runs: the
+    rows are already on the driver, and sending them through
+    ``parallelize``, a Python-worker task and a write job costs
+    ~0.2 s per micro-batch.
+    ``schema`` is a ``StructType``; ``rows`` are tuples in its field
+    order. Local filesystem, like the rest of this module's
+    ``os.replace`` commit."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema).with_metadata(
+        {"org.apache.spark.sql.parquet.row.metadata": schema.json()}
+    )
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow,
+    )
+    name, seg = new_segment(path)
+    os.makedirs(seg)
+    pq.write_table(table, os.path.join(seg, "part-00000.snappy.parquet"))
+    _commit_replace(path, name, schema)
 
 
 def append_write(df, path: str, *, partition_by: str | None = None) -> str:
@@ -234,5 +304,5 @@ def append_write(df, path: str, *, partition_by: str | None = None) -> str:
         writer = writer.partitionBy(partition_by)
     writer.parquet(seg)
     legacy = [] if read_manifest(path) is not None else adopt_legacy(path)
-    append_commit(path, legacy + [name])
+    append_commit(path, legacy + [name], schema=_data_schema(df, partition_by))
     return name

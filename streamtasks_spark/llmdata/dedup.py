@@ -1364,9 +1364,32 @@ def bloom_dedup(
     stays engine-neutral. NULL-text docs can never match (NULL
     positions join nothing) and report ``n_bits_hit = 0``."""
     return _bloom_probe(
-        new_docs,
+        _bloom_positions(new_docs, id_col, text_col, m_bits, n_hashes),
         _bloom_bits(ref_docs, id_col, text_col, m_bits, n_hashes),
-        id_col, text_col, m_bits, n_hashes,
+        id_col, m_bits, n_hashes,
+    )
+
+
+def _bloom_positions(
+    docs: DataFrame, id_col: str, text_col: str, m_bits: int,
+    n_hashes: int,
+) -> DataFrame:
+    """(id, __pos): each doc's ``n_hashes`` bit positions (NULL for a
+    NULL text) — the one spread → md5 → explode pass that both the
+    probe side and the bit set derive from."""
+    pos = _bloom_pos_expr(
+        f"md5({norm_text(text_col)})", n_hashes, m_bits, "spark"
+    )
+    return spread(docs, id_col).select(
+        F.col(id_col), F.explode(F.expr(pos)).alias("__pos")
+    )
+
+
+def _set_bits(positions: DataFrame) -> DataFrame:
+    return (
+        positions.select("__pos")
+        .filter(F.col("__pos").isNotNull())
+        .distinct()
     )
 
 
@@ -1377,35 +1400,23 @@ def _bloom_bits(
     """The reference corpus's DISTINCT set bit positions — the bloom
     'filter' in relational form, shared by :func:`bloom_dedup` and
     :class:`BloomIndex`."""
-    pos = _bloom_pos_expr(
-        f"md5({norm_text(text_col)})", n_hashes, m_bits, "spark"
-    )
-    return (
-        spread(ref_docs, id_col)
-        .select(F.explode(F.expr(pos)).alias("__pos"))
-        .filter(F.col("__pos").isNotNull())
-        .distinct()
+    return _set_bits(
+        _bloom_positions(ref_docs, id_col, text_col, m_bits, n_hashes)
     )
 
 
 def _bloom_probe(
-    new_docs: DataFrame, bits: DataFrame, id_col: str, text_col: str,
-    m_bits: int, n_hashes: int,
+    positions: DataFrame, bits: DataFrame, id_col: str, m_bits: int,
+    n_hashes: int,
 ) -> DataFrame:
-    """Probe ``new_docs`` against a bit-position set from
-    :func:`_bloom_bits` (freshly derived or read back from a
-    :class:`BloomIndex`)."""
-    pos = _bloom_pos_expr(
-        f"md5({norm_text(text_col)})", n_hashes, m_bits, "spark"
-    )
+    """Probe docs, given as their :func:`_bloom_positions`, against a
+    bit-position set from :func:`_bloom_bits` (freshly derived or read
+    back from a :class:`BloomIndex`)."""
     ref_bits = bits.withColumn("__set", F.lit(1))
     if m_bits <= (1 << 22):
         ref_bits = F.broadcast(ref_bits)
-    probe = spread(new_docs, id_col).select(
-        F.col(id_col), F.explode(F.expr(pos)).alias("__pos")
-    )
     return (
-        probe.join(ref_bits, "__pos", "left")
+        positions.join(ref_bits, "__pos", "left")
         .groupBy(id_col)
         .agg(F.count("__set").alias("n_bits_hit"))
         .select(
@@ -1502,31 +1513,39 @@ class BloomIndex:
         # re-distinct here so n_bits_hit counts each bit once
         return old.select("__pos").distinct()
 
+    def _positions(self, docs: DataFrame) -> DataFrame:
+        return _bloom_positions(
+            docs, self.id_col, self.text_col, self.m_bits, self.n_hashes
+        )
+
+    def _probe(self, positions: DataFrame) -> DataFrame:
+        return _bloom_probe(
+            positions, self._history_bits(positions.sparkSession),
+            self.id_col, self.m_bits, self.n_hashes,
+        )
+
     def probe(self, docs: DataFrame) -> DataFrame:
         """(id, n_bits_hit, maybe_dup) for each doc against everything
         ingested so far; read-only."""
-        return _bloom_probe(
-            docs, self._history_bits(docs.sparkSession),
-            self.id_col, self.text_col, self.m_bits, self.n_hashes,
-        )
+        return self._probe(self._positions(docs))
 
     def ingest(self, docs: DataFrame) -> DataFrame:
         """Probe the batch against HISTORY, then append the batch's own
         bit positions; returns the probe result, materialized before
         the append so its plan cannot observe the batch's own bits
-        (the MinHashIndex snapshot rule)."""
-        spark = docs.sparkSession
-        res = pin(self.probe(docs))
+        (the MinHashIndex snapshot rule). Probe and append derive from
+        one pinned positions frame, so the batch is read, spread and
+        hashed once."""
+        from streamtasks_spark.core.state import append_write
+
+        positions = pin(self._positions(docs))
+        res = pin(self._probe(positions))
         res.count()  # materialize before the append below
-        new_bits = _bloom_bits(
-            docs, self.id_col, self.text_col, self.m_bits, self.n_hashes
-        )
         # versioned-manifest append: the batch's positions become
         # visible in one atomic pointer flip — a crash mid-write leaves
         # an invisible orphan segment, never a torn bit set
-        from streamtasks_spark.core.state import append_write
-
-        append_write(new_bits, self.bits_path)
+        append_write(_set_bits(positions), self.bits_path)
+        positions.unpersist()
         return res
 
     def compact(self, spark, *, files: int = 4) -> None:
@@ -2233,11 +2252,7 @@ def compact_table(
     import shutil
     import uuid
 
-    from streamtasks_spark.core.state import (
-        commit_segments,
-        new_segment,
-        read_manifest,
-    )
+    from streamtasks_spark.core.state import read_manifest, replace_write
 
     cur = snapshot_read(
         spark, path, base_path=path if partition_by else None
@@ -2249,16 +2264,13 @@ def compact_table(
         # BloomIndex re-distincts positions duplicated across appended
         # part files (append-mode parquet cannot dedup across files)
         cur = transform(cur)
-    writer = cur.repartition(
-        files, *( [partition_by] if partition_by else [] )
-    ).write
+    cur = cur.repartition(files, *([partition_by] if partition_by else []))
+    if read_manifest(path) is not None:
+        replace_write(cur, path, partition_by=partition_by)
+        return True
+    writer = cur.write
     if partition_by:
         writer = writer.partitionBy(partition_by)
-    if read_manifest(path) is not None:
-        name, seg = new_segment(path)
-        writer.parquet(seg)
-        commit_segments(path, [name])
-        return True
     tag = uuid.uuid4().hex[:8]
     tmp = f"{path}__compact_{tag}"
     old = f"{path}__old_{tag}"

@@ -46,7 +46,7 @@ def _schema_of(df: DataFrame, cols: Sequence[str]) -> StructType:
 def _atomic_state_write(spark, rows, schema: str, path: str) -> None:
     """Replace a (small) persistent state table atomically through the
     versioned-manifest commit protocol
-    (:func:`streamtasks_spark.core.state.replace_write`): the rewrite
+    (:func:`streamtasks_spark.core.state.replace_rows`): the rewrite
     lands in a fresh immutable segment, then ONE atomic single-file
     manifest replace makes it the live version. A crash at any point
     before the flip leaves the previous state the live one (a restart
@@ -59,20 +59,26 @@ def _atomic_state_write(spark, rows, schema: str, path: str) -> None:
     filesystem provides (POSIX rename, HDFS rename, object PUT).
     Crash debris is an unreferenced segment directory — inert (never
     resolved by :func:`~streamtasks_spark.llmdata.dedup.snapshot_read`,
-    which reads through the manifest) and swept by the next commit."""
-    from streamtasks_spark.core.state import replace_write
+    which reads through the manifest) and swept by the next commit.
 
-    # ONE slice from the start (r12, measured): `rows` is a
-    # sketch-bounded driver-side list; the default createDataFrame
-    # spreads it over defaultParallelism pickled slices and the
-    # single-file write then pays one Python-worker round trip PER
-    # SLICE (~5-7 s per micro-batch at local[32]). parallelize(rows, 1)
-    # makes the write one task, one round trip (~0.3 s), same file.
-    replace_write(
-        spark.createDataFrame(
-            spark.sparkContext.parallelize(rows, 1), schema
-        ),
-        path,
+    ``rows`` is sketch-bounded and already on the driver (the twin's
+    merged registers/counters), so it goes straight from the driver
+    into the segment as one parquet file — no Spark job. ``spark`` is
+    the twin's session; the DDL ``schema`` parses on its JVM."""
+    from pyspark.sql.types import StructType
+
+    from streamtasks_spark.core.state import replace_rows
+
+    replace_rows(rows, StructType.fromDDL(schema), path)
+
+
+def _one_row(spark, **cols) -> DataFrame:
+    """A one-row frame of literal columns, built in the JVM on one
+    partition: ``createDataFrame([row])`` spreads a list over
+    defaultParallelism pickled slices, i.e. that many Python-worker
+    tasks (~0.28 s) to append one report row."""
+    return spark.range(0, 1, 1, 1).select(
+        *[F.lit(v).cast(t).alias(c) for c, (v, t) in cols.items()]
     )
 
 
@@ -1297,9 +1303,9 @@ def streaming_approx_distinct(
         # decimal; ln must come from the same libm as approx_distinct_
         # hll's corrected_estimate), so the documented bit-equality to
         # the one-shot batch estimate holds by construction.
-        spark.createDataFrame(
-            [(batch_id, n_hit, est)],
-            "batch_id long, n_buckets_hit long, __est double",
+        _one_row(
+            spark, batch_id=(batch_id, "long"),
+            n_buckets_hit=(n_hit, "long"), __est=(est, "double"),
         ).select(
             "batch_id",
             "n_buckets_hit",
@@ -1450,9 +1456,10 @@ def streaming_heavy_hitters(
             )
             for j in range(depth)
         )
-        spark.createDataFrame(
-            [(batch_id, total, n_heavy_cells)],
-            "batch_id long, token_total long, n_heavy_cells long",
+        _one_row(
+            spark, batch_id=(batch_id, "long"),
+            token_total=(total, "long"),
+            n_heavy_cells=(n_heavy_cells, "long"),
         ).write.mode("append").parquet(reports_path)
 
     return (

@@ -61,13 +61,28 @@ def _canon(df):
     return sorted(tuple(r[c] for c in cols) for r in df.collect())
 
 
+def _jobs_in(spark, fn):
+    """Spark job ids launched while ``fn`` runs, by job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs_in_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count probe")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
 # ------------------------------------------------------------- core API
 
 
 def test_replace_and_append_roundtrip(spark, tmp_path):
     p = str(tmp_path / "t")
     state.replace_write(
-        spark.createDataFrame([(1, "a")], "id int, v string"), p, coalesce=1
+        spark.createDataFrame([(1, "a")], "id int, v string"), p, partitions=1
     )
     m1 = state.read_manifest(p)
     assert m1["version"] == 1 and len(m1["segments"]) == 1
@@ -93,8 +108,13 @@ def test_partitioned_segments_keep_column_and_prune(spark, tmp_path):
     )
     state.append_write(df, p, partition_by="__cell")
     state.append_write(df, p, partition_by="__cell")
-    r = snapshot_read(spark, p)
-    assert "__cell" in r.columns
+    # the manifest's schema leaves the partition column to directory
+    # discovery, which keeps the type inference gives it
+    assert [f["name"] for f in state.read_manifest(p)["schema"]["fields"]] \
+        == ["id"]
+    jobs, r = _jobs_in(spark, lambda: snapshot_read(spark, p))
+    assert jobs == []
+    assert r.schema.simpleString() == "struct<id:int,__cell:int>"
     assert r.count() == 128
     plan = (
         r.filter(F.col("__cell") == 2)
@@ -107,7 +127,7 @@ def test_partitioned_segments_keep_column_and_prune(spark, tmp_path):
 def test_crash_at_flip_preserves_previous_version(spark, tmp_path, monkeypatch):
     p = str(tmp_path / "t")
     v1 = spark.createDataFrame([(1, "a")], "id int, v string")
-    state.replace_write(v1, p, coalesce=1)
+    state.replace_write(v1, p, partitions=1)
     before = _canon(snapshot_read(spark, p))
     with _crash_at_flip(monkeypatch):
         with pytest.raises(_FlipCrash):
@@ -161,6 +181,92 @@ def test_legacy_directory_adoption(spark, tmp_path):
     assert not [e for e in os.listdir(p2) if e.endswith(".parquet")]
 
 
+def test_manifest_read_launches_no_jobs(spark, tmp_path):
+    """The manifest's recorded schema resolves every segment without a
+    footer-read job, however many segments an append-per-batch table
+    has accreted."""
+    p = str(tmp_path / "t")
+    for i in range(10):
+        state.append_write(
+            spark.createDataFrame([(i, str(i))], "id long, v string"), p
+        )
+    assert len(state.read_manifest(p)["segments"]) == 10
+    jobs, df = _jobs_in(spark, lambda: state.manifest_read(spark, p))
+    assert jobs == []
+    assert df.schema.simpleString() == "struct<id:bigint,v:string>"
+    assert _canon(df) == [(i, str(i)) for i in range(10)]
+
+
+def test_manifest_without_schema_still_reads(spark, tmp_path):
+    """A manifest committed before the schema field existed."""
+    import json
+
+    p = str(tmp_path / "old")
+    for i in range(3):
+        state.append_write(
+            spark.createDataFrame([(i, i % 2)], "id long, __cell int"),
+            p, partition_by="__cell",
+        )
+    mf = os.path.join(p, state.MANIFEST_NAME)
+    with open(mf) as f:
+        m = json.load(f)
+    del m["schema"]
+    with open(mf, "w") as f:
+        json.dump(m, f)
+    r = state.manifest_read(spark, p)
+    assert r.schema.simpleString() == "struct<id:bigint,__cell:int>"
+    assert _canon(r) == [(0, 0), (0, 2), (1, 1)]
+
+
+@pytest.mark.parametrize("ddl, rows", [
+    ("`__bucket` bigint, `__M` int", [(3, 5), (1, 7), (250, 1)]),
+    ("`__row` int, `__bucket` bigint, `__cell` bigint",
+     [(0, 3, 9), (1, 17, 2**40), (3, 255, 1)]),
+])
+def test_driver_written_sketch_segment_matches_spark_writer(
+        spark, tmp_path, ddl, rows):
+    """The streaming sketch state is written from the driver: its
+    parquet file must carry the physical types, and read back as the
+    Spark schema, that Spark's own writer produced for it, so every
+    reader (manifest read, compaction, plain directory read) sees the
+    same table."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from streamtasks_spark.llmdata.dedup import compact_table
+    from streamtasks_spark.streaming.stateful import _atomic_state_write
+
+    p = str(tmp_path / "sketch")
+    jobs, _ = _jobs_in(
+        spark, lambda: _atomic_state_write(spark, rows, ddl, p)
+    )
+    assert jobs == []
+    ref = str(tmp_path / "spark_written")
+    spark.createDataFrame(rows, ddl).write.parquet(ref)
+
+    def physical(d):
+        f = sorted(glob.glob(f"{d}/**/*.parquet", recursive=True))[0]
+        s = pq.ParquetFile(f).schema
+        return [(c.name, c.physical_type, c.logical_type.type,
+                 c.max_definition_level) for c in s]
+
+    assert physical(p) == physical(ref)
+    want = _canon(spark.read.parquet(ref))
+    want_schema = spark.read.parquet(ref).schema
+
+    def live_segment():
+        return os.path.join(p, state.read_manifest(p)["segments"][0])
+
+    plain = spark.read.parquet(live_segment())  # schema inference
+    assert plain.schema == want_schema and _canon(plain) == want
+    assert snapshot_read(spark, p).schema == want_schema
+    assert _canon(snapshot_read(spark, p)) == want
+    assert compact_table(spark, p, files=1)
+    assert _canon(snapshot_read(spark, p)) == want
+    assert _canon(spark.read.parquet(live_segment())) == want
+
+
 # -------------------------------------------- index/sketch state owners
 #
 # Each case: build state from batch 1, snapshot the durable state,
@@ -211,6 +317,23 @@ def test_bloom_index_crash_at_flip(spark, tmp_path, monkeypatch):
         )
     )
     assert got == want
+
+
+def test_bloom_ingest_jobs_do_not_grow_with_segments(spark, tmp_path):
+    """Every BloomIndex ingest appends one bits segment; resolving the
+    grown history must not cost one more Spark job per segment."""
+    from streamtasks_spark.llmdata.dedup import BloomIndex
+
+    docs = _docs(spark)
+    idx = BloomIndex(str(tmp_path / "bloom"), m_bits=1 << 16)
+    counts = []
+    for k in range(8):
+        batch = docs.filter(F.col("doc_id") % 8 == k)
+        jobs, res = _jobs_in(spark, lambda: idx.ingest(batch))
+        res.unpersist()
+        counts.append(len(jobs))
+    assert len(state.read_manifest(idx.bits_path)["segments"]) == 8
+    assert len(set(counts[1:])) == 1, counts
 
 
 def test_paragraph_index_crash_at_flip(spark, tmp_path, monkeypatch):

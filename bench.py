@@ -66,6 +66,51 @@ def short_names(names) -> dict[str, str]:
     return out
 
 
+# The round driver keeps only the LAST 2,000 chars of stdout; a JSON
+# line longer than that is head-truncated and fails to parse (this
+# killed BENCH_r03: 102 per-query timings ≈ 2,550 chars, and dropping
+# the map entirely blinded PERF_r11).
+_FULL_MAP_MAX = 1900
+_LINE_MAX = 1950
+
+
+def stdout_line(payload: dict, results: dict, names) -> str:
+    """The one stdout JSON line for ``payload`` and the per-query
+    ``results``: the full-name map while it fits; otherwise a COMPACT
+    map keyed by :func:`short_names` aliases of ``names`` (the FULL
+    queries() order, so a filtered run's aliases match the full-run
+    table) with short seconds (two decimals under 1 s, one under
+    100 s, whole above), which fits at 152 queries; and if even that does not fit, the record without the
+    map, saying so (``queries_omitted``). BENCH_DETAIL.json next to
+    this script always gets the full map, full precision, and the
+    alias table."""
+    line = json.dumps({**payload, "queries": results})
+    if len(line) <= _FULL_MAP_MAX:
+        return line
+
+    def fmt(v: float) -> float | int:
+        return round(v, 2) if v < 1 else round(v, 1) if v < 100 else round(v)
+
+    aliases = short_names(names)
+    compact = {aliases[n]: (None if v is None else fmt(v))
+               for n, v in results.items()}
+    # wall_total stays in BENCH_DETAIL.json only: every stdout char
+    # competes with per-query entries inside the driver's 2,000-char
+    # keep, and calib_md5_sec (boot-health normalizer) wins that seat
+    slim = {k: v for k, v in payload.items() if k != "wall_total"}
+    line = json.dumps({**slim, "queries": compact}, separators=(",", ":"))
+    if len(line) <= _LINE_MAX:
+        return line
+    log(f"bench: compact per-query map is {len(line)} chars > "
+        f"{_LINE_MAX}; printing the record without it")
+    return json.dumps(
+        {**slim, "queries_omitted": (
+            f"{len(line)}-char line; per-query times are in the stderr "
+            "log and, on a full run, BENCH_DETAIL.json")},
+        separators=(",", ":"),
+    )
+
+
 def run_query(fn, spark, sf_dir: str) -> float:
     # drop persisted subplans from prior runs: cache-manager reuse makes
     # timings depend on run order and eviction state, not the query
@@ -208,40 +253,17 @@ def main() -> int:
         "wall_total": round(time.perf_counter() - t_start, 2),
         "calib_md5_sec": round(calib, 4),
     }
-    # The round driver keeps only the LAST 2,000 chars of stdout; a JSON
-    # line longer than that is head-truncated and fails to parse (this
-    # killed BENCH_r03: 102 per-query timings ≈ 2,550 chars, and dropping
-    # the map entirely blinded PERF_r11). Inline the full-name map while
-    # it fits; otherwise emit a COMPACT map (short_names() aliases,
-    # 2-significant-digit seconds) that always fits at 152 queries.
-    # BENCH_DETAIL.json next to this script always gets the full map,
-    # full precision, and the alias table.
     detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                                "BENCH_DETAIL.json")
-    aliases = short_names(results)
     if not only:  # a filtered run must not clobber the full-run record
         try:
             with open(detail_path, "w") as f:
                 json.dump({**payload, "queries": results,
-                           "stdout_query_aliases": aliases}, f, indent=1)
+                           "stdout_query_aliases": short_names(qs)},
+                          f, indent=1)
         except OSError as e:
             log(f"bench: could not write {detail_path}: {e}")
-    with_queries = json.dumps({**payload, "queries": results})
-    if len(with_queries) <= 1900:
-        line = with_queries
-    else:
-        def fmt(v: float) -> float:
-            return round(v, 2) if v < 1 else round(v, 1)
-
-        compact = {aliases[n]: (None if v is None else fmt(v))
-                   for n, v in results.items()}
-        # wall_total stays in BENCH_DETAIL.json only: every stdout char
-        # competes with per-query entries inside the driver's 2,000-char
-        # keep, and calib_md5_sec (boot-health normalizer) wins that seat
-        slim = {k: v for k, v in payload.items() if k != "wall_total"}
-        line = json.dumps({**slim, "queries": compact},
-                          separators=(",", ":"))
-    assert len(line) <= 1950, f"stdout JSON line {len(line)} chars > 1950"
+    line = stdout_line(payload, results, list(qs))
     print(line, flush=True)
     return 0 if ok and len(ok) == len(results) else 1
 

@@ -245,13 +245,14 @@ def replace_write(df, path: str, *, partitions: int | None = None,
     name, seg = new_segment(path)
     # repartition, NOT coalesce (r12, measured): every caller that asks
     # for file-count control here passes a codebook/sketch-sized frame,
-    # and most of those are createDataFrame local relations whose rows
-    # live in defaultParallelism pickled slices. coalesce(1) folds all
-    # those slices into ONE task that evaluates them through the Python
-    # worker SEQUENTIALLY — ~5-7 s per tiny state write (32 round trips
-    # at local[32]; same pathology on a cluster). repartition keeps the
-    # slice evaluations parallel on the map side and funnels rows
-    # through one reduce task: 0.6 s vs 5.2 s measured on a 32-row
+    # but its upstream can be a full corpus scan (an IVF seed is a
+    # filter over the ingest batch). coalesce(1) has no shuffle
+    # boundary, so it folds that whole upstream stage into ONE task;
+    # r12 measured ~5 s per tiny state write that way, when the
+    # upstream was a Python-worker map over pickled row slices (such
+    # frames are JVM local relations now, core.frames.local_frame).
+    # repartition keeps the upstream parallel on the map side and
+    # funnels rows through one reduce task: 0.6 s vs 5.2 s on a 32-row
     # register table. Row order within the file can differ between
     # the two; every reader of these tables is row-order-insensitive.
     w = df.repartition(partitions) if partitions else df
@@ -274,17 +275,12 @@ def replace_rows(rows, schema, path: str) -> None:
     ``schema`` is a ``StructType``; ``rows`` are tuples in its field
     order. Local filesystem, like the rest of this module's
     ``os.replace`` commit."""
-    import pyarrow as pa
     import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import to_arrow_schema
 
-    arrow = to_arrow_schema(schema).with_metadata(
+    from streamtasks_spark.core.frames import arrow_table
+
+    table = arrow_table(rows, schema).replace_schema_metadata(
         {"org.apache.spark.sql.parquet.row.metadata": schema.json()}
-    )
-    cols = list(zip(*rows)) or [()] * len(arrow)
-    table = pa.Table.from_arrays(
-        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
-        schema=arrow,
     )
     name, seg = new_segment(path)
     os.makedirs(seg)

@@ -62,6 +62,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from streamtasks_spark.core.frames import local_frame
 from streamtasks_spark.core.state import manifest_read, replace_write
 from streamtasks_spark.llmdata.dedup import (
     bounded_collect,
@@ -258,8 +259,9 @@ def _bpe_fit(
         probe = words.limit(bound + 1).collect()
         if len(probe) <= bound:
             merges, seq_rows = _bpe_fit_local(probe, n_merges, min_freq)
-            seqs_local = words.sparkSession.createDataFrame(
-                seq_rows, "word string, freq bigint, seq string"
+            seqs_local = local_frame(
+                words.sparkSession, seq_rows,
+                "word string, freq bigint, seq string",
             )
             return merges, seqs_local
         # over the bound: the probe cost one corpus tokenize pass — the
@@ -329,7 +331,7 @@ def bpe_train(
         _word_freqs(docs, id_col, text_col), n_merges, min_freq,
         max_local_vocab=max_local_vocab,
     )
-    return docs.sparkSession.createDataFrame(merges, _MERGE_SCHEMA).orderBy(
+    return local_frame(docs.sparkSession, merges, _MERGE_SCHEMA).orderBy(
         "merge_rank"
     )
 

@@ -43,6 +43,8 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from streamtasks_spark.core.frames import local_frame
+
 # modulus for the minhash universal-hash family (a*h + b) % P.
 # P is prime and > every 28-bit shingle hash; a < 2^30 keeps a*h < 2^58,
 # safely inside int64 in BOTH engines (DuckDB errors on overflow).
@@ -279,6 +281,31 @@ def tokens_expr(text_col: str, engine: str = "spark") -> str:
     return (
         f"list_filter(string_split({norm_text(text_col, 'duck')}, ' '), "
         f"t -> t <> '')"
+    )
+
+
+def ngrams_expr(toks: str, n: int, engine: str = "spark") -> str:
+    """Space-joined word n-grams over the token array ``toks`` as a SQL
+    fragment: NULL → NULL, fewer than ``n`` tokens → empty (Spark's
+    ``sequence(0, size - n)`` would otherwise run DESCENDING). ``toks``
+    appears four times, once inside the lambda, and Catalyst does not
+    hoist a lambda-free subexpression out of a higher-order function,
+    so Spark callers pass a token-array COLUMN projected once (a
+    :func:`tokens_expr` there would tokenize each row ~size + 3
+    times). DuckDB callers may inline the :func:`tokens_expr`
+    fragment."""
+    if engine == "spark":
+        return (
+            f"CASE WHEN {toks} IS NULL THEN NULL "
+            f"WHEN size({toks}) < {n} THEN array() "
+            f"ELSE transform(sequence(0, size({toks}) - {n}), "
+            f"i -> concat_ws(' ', slice({toks}, i + 1, {n}))) END"
+        )
+    return (
+        f"CASE WHEN {toks} IS NULL THEN NULL "
+        f"WHEN len({toks}) < {n} THEN CAST([] AS VARCHAR[]) "
+        f"ELSE list_transform(range(0, len({toks}) - {n} + 1), "
+        f"i -> array_to_string(list_slice({toks}, i + 1, i + {n}), ' ')) END"
     )
 
 
@@ -1507,7 +1534,7 @@ class BloomIndex:
     def _history_bits(self, spark) -> DataFrame:
         old = self._bits_or_none(spark)
         if old is None:
-            return spark.createDataFrame([], "__pos bigint")
+            return local_frame(spark, [], "__pos bigint")
         # appended part-files can repeat a position (each ingest writes
         # its batch's distinct positions without reading history);
         # re-distinct here so n_bits_hit counts each bit once
@@ -1648,8 +1675,9 @@ def connected_components(
                     # larger root points at smaller → final root IS the min
                     parent[max(ra, rb)] = min(ra, rb)
             members = [(x, find(x)) for x in parent]
-            return pairs.sparkSession.createDataFrame(
-                members, f"node {node_t}, component {node_t}"
+            return local_frame(
+                pairs.sparkSession, members,
+                f"node {node_t}, component {node_t}",
             )
     edges = edges.localCheckpoint(eager=True)
     prev_fp = None

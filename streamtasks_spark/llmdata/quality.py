@@ -32,7 +32,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from streamtasks_spark.llmdata.dedup import norm_text, spread, tokens_expr
+from streamtasks_spark.core.frames import local_frame
+from streamtasks_spark.llmdata.dedup import (
+    ngrams_expr,
+    norm_text,
+    spread,
+    tokens_expr,
+)
 from streamtasks_spark.llmdata.textstats import STOPWORDS
 
 # Rule constants (documented C4/Gopher-inspired bounds; tuned for the
@@ -384,16 +390,10 @@ def _ngram_tokenized(
     scoring units → NULL ratios, the zero-token contract). The guard
     matters: Spark's ``sequence(0, size-n)`` with size < n would
     generate a DESCENDING sequence, not an empty one."""
-    grams = (
-        "CASE WHEN __w IS NULL THEN NULL "
-        f"WHEN size(__w) < {n} THEN array() "
-        f"ELSE transform(sequence(0, size(__w) - {n}), "
-        f"i -> concat_ws(' ', slice(__w, i + 1, {n}))) END"
-    )
     return (
         spread(docs, id_col)
         .select(F.col(id_col), F.expr(tokens_expr(text_col)).alias("__w"))
-        .select(F.col(id_col), F.expr(grams).alias("__toks"))
+        .select(F.col(id_col), F.expr(ngrams_expr("__w", n)).alias("__toks"))
     )
 
 
@@ -471,10 +471,7 @@ def _unigram_score_on(
     total: int,
     id_col: str,
 ) -> DataFrame:
-    vocab = spark.createDataFrame(
-        list(vocab_rows) or [(None, None)],
-        "__t string, __c bigint",
-    ).filter(F.col("__t").isNotNull())
+    vocab = local_frame(spark, vocab_rows, "__t string, __c bigint")
     ex = base.select(
         F.col(id_col),
         F.col("__toks").isNull().alias("__nul"),
@@ -692,13 +689,7 @@ def oracle_ngram_lm_sql(
     NULL contract; DuckDB's ``range`` is end-exclusive so the
     empty-vs-descending sequence hazard is Spark-side only, but the
     CASE guard is kept structurally identical)."""
-    te = tokens_expr(text_col, "duck")
-    grams = (
-        f"CASE WHEN {te} IS NULL THEN NULL "
-        f"WHEN len({te}) < {n} THEN CAST([] AS VARCHAR[]) "
-        f"ELSE list_transform(range(0, len({te}) - {n} + 1), "
-        f"i -> array_to_string(list_slice({te}, i + 1, i + {n}), ' ')) END"
-    )
+    grams = ngrams_expr(tokens_expr(text_col, "duck"), n, "duck")
     return _lm_sql_body(source_sql, id_col, grams, vocab_size)
 
 
@@ -865,10 +856,7 @@ def _dsir_score_on(
     id_col: str,
     n_buckets: int,
 ) -> DataFrame:
-    bdf = spark.createDataFrame(
-        list(counts) or [(None,) * 3],
-        "__b bigint, __ct bigint, __cr bigint",
-    ).filter(F.col("__b").isNotNull())
+    bdf = local_frame(spark, counts, "__b bigint, __ct bigint, __cr bigint")
     ex = base.select(
         F.col(id_col),
         F.col("__toks").isNull().alias("__nul"),

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from streamtasks_spark.core.frames import local_frame
 from streamtasks_spark.llmdata.dedup import (
     bounded_collect,
     pin,
@@ -881,8 +882,8 @@ def _empty_pq_result(
     from the inputs so downstream unions/joins see no difference."""
     qt = dict(queries.dtypes).get(id_col, "bigint")
     vt = dict(vectors.dtypes).get(id_col, "bigint")
-    return vectors.sparkSession.createDataFrame(
-        [],
+    return local_frame(
+        vectors.sparkSession, [],
         f"query_id {qt}, {id_col} {vt}, cosine double, approx double, "
         "rank int",
     )
@@ -3127,8 +3128,8 @@ class IvfPqIndex:
             from streamtasks_spark.core.state import replace_write
 
             replace_write(
-                spark.createDataFrame(
-                    rows, "__m int, __j int, __cv array<double>"
+                local_frame(
+                    spark, rows, "__m int, __j int, __cv array<double>"
                 ),
                 self.pq_codebook_path, partitions=1,
             )
@@ -3312,8 +3313,8 @@ class IvfPqIndex:
             for j in sorted(new_pq[0][m])
         ]
         replace_write(
-            spark.createDataFrame(
-                pq_rows, "__m int, __j int, __cv array<double>"
+            local_frame(
+                spark, pq_rows, "__m int, __j int, __cv array<double>"
             ),
             f"{epoch}/pq_codebook", partitions=1,
         )
@@ -3661,7 +3662,8 @@ def train_centroids(
         pulled = v.limit(_ANN_MAX_LOCAL_TRAIN + 1).collect()
         if len(pulled) <= _ANN_MAX_LOCAL_TRAIN:
             cents = _kmeans_fit_local(pulled, id_col, n_cells, n_iters)
-            return vectors.sparkSession.createDataFrame(
+            return local_frame(
+                vectors.sparkSession,
                 [
                     (cell, cv, math.sqrt(sum_lr(x * x for x in cv)))
                     for cell, cv in sorted(cents.items())
@@ -3743,8 +3745,8 @@ def train_centroids(
         (cell, cv, math.sqrt(sum_lr(x * x for x in cv)))
         for cell, cv in sorted(cents.items())
     ]
-    return spark.createDataFrame(
-        out, "__cell long, __cv array<double>, __cn double"
+    return local_frame(
+        spark, out, "__cell long, __cv array<double>, __cn double"
     )
 
 

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from streamtasks_spark.llmdata.dedup import (
+    ngrams_expr,
     norm_text,
     pin,
     spread,
@@ -1415,26 +1416,57 @@ def oracle_heavy_hitters_cms_sql(
     """
 
 
-def _hll_units_expr(text_col: str, n: int, engine: str) -> str:
-    """The HLL counting unit as a SQL array fragment: word n-grams
-    over the corpus tokenization (n = 1 → the tokens themselves) —
-    same <n-words → empty, NULL → NULL contract as ngram_lm's units;
-    explode/unnest then drop the NULLs identically."""
-    te = tokens_expr(text_col, engine)
-    if n == 1:
-        return te
-    if engine == "spark":
-        return (
-            f"CASE WHEN {te} IS NULL THEN NULL "
-            f"WHEN size({te}) < {n} THEN array() "
-            f"ELSE transform(sequence(0, size({te}) - {n}), "
-            f"i -> concat_ws(' ', slice({te}, i + 1, {n}))) END"
-        )
+def _hll_units_expr(toks: str, n: int, engine: str) -> str:
+    """The HLL counting unit as a SQL array fragment over the token
+    array ``toks``: word n-grams (:func:`~streamtasks_spark.llmdata.
+    dedup.ngrams_expr`; n = 1 → the tokens themselves) — same
+    <n-words → empty, NULL → NULL contract as ngram_lm's units;
+    explode/unnest then drop the NULLs identically. On Spark ``toks``
+    is a column projected once per row (:func:`_hll_units`)."""
+    return toks if n == 1 else ngrams_expr(toks, n, engine)
+
+
+def _hll_units(docs: DataFrame, id_col: str, text_col: str, n: int):
+    """One ``__t`` row per non-NULL HLL counting unit of ``docs``. The
+    text is tokenized ONCE per row into ``__toks`` and the n-grams
+    explode over that column: Catalyst does not hoist the tokenizer
+    out of the n-gram lambda, so inlining it would tokenize a T-token
+    document ~T + 3 times."""
     return (
-        f"CASE WHEN {te} IS NULL THEN NULL "
-        f"WHEN len({te}) < {n} THEN CAST([] AS VARCHAR[]) "
-        f"ELSE list_transform(range(0, len({te}) - {n} + 1), "
-        f"i -> array_to_string(list_slice({te}, i + 1, i + {n}), ' ')) END"
+        spread(docs, id_col)
+        .select(F.expr(tokens_expr(text_col)).alias("__toks"))
+        .select(
+            F.explode(F.expr(_hll_units_expr("__toks", n, "spark")))
+            .alias("__t")
+        )
+        .filter(F.col("__t").isNotNull())
+    )
+
+
+def _hll_registers(units: DataFrame, p: int) -> DataFrame:
+    """``(__bucket, __M)``: the 2^p-register file of the ``__t`` unit
+    rows — bucket = 48-bit md5 prefix mod m, rank = the integer-exact
+    leading-zero count of the rest, max per bucket (partial max before
+    the m-keyed exchange). Shared by :func:`approx_distinct_hll` and
+    its streaming twin, whose merged registers must equal it."""
+    m = 1 << p
+    w = 48 - p          # value width after the bucket split
+    s = w + 1           # max possible rank; exponents S-M land in [0, S]
+    h = "cast(conv(substring(md5(__t), 1, 12), 16, 10) as bigint)"
+    return (
+        units.select(
+            F.expr(f"pmod({h}, {m})").alias("__bucket"),
+            F.expr(f"cast(floor({h} / {m}) as bigint)").alias("__v"),
+        )
+        .select(
+            "__bucket",
+            F.expr(
+                f"CASE WHEN __v = 0 THEN {s} "
+                f"ELSE {w} - length(bin(__v)) + 1 END"
+            ).alias("__rho"),
+        )
+        .groupBy("__bucket")
+        .agg(F.max("__rho").alias("__M"))
     )
 
 
@@ -1524,26 +1556,8 @@ def approx_distinct_hll(
         else 0.5  # m < 16: out of the published constant table
     )
     am2 = alpha * m * m
-    toks = (
-        spread(docs, id_col)
-        .select(
-            F.explode(F.expr(_hll_units_expr(text_col, n, "spark")))
-            .alias("__t")
-        )
-        .filter(F.col("__t").isNotNull())
-    )
-    h = ("cast(conv(substring(md5(__t), 1, 12), 16, 10) as bigint)")
-    hashed = toks.select(
-        F.expr(f"pmod({h}, {m})").alias("__bucket"),
-        F.expr(f"cast(floor({h} / {m}) as bigint)").alias("__v"),
-    ).select(
-        "__bucket",
-        F.expr(
-            f"CASE WHEN __v = 0 THEN {s} "
-            f"ELSE {w} - length(bin(__v)) + 1 END"
-        ).alias("__rho"),
-    )
-    regs = hashed.groupBy("__bucket").agg(F.max("__rho").alias("__M"))
+    toks = _hll_units(docs, id_col, text_col, n)
+    regs = _hll_registers(toks, p)
     sk = regs.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_buckets_hit"),
         F.sum(
@@ -1611,6 +1625,7 @@ def oracle_approx_distinct_hll_sql(
     )
     am2 = alpha * m * m
     h = "cast('0x' || substr(md5(__t), 1, 12) AS BIGINT)"
+    units = _hll_units_expr(tokens_expr(text_col, "duck"), n, "duck")
     est = (
         f"CAST({am2!r} AS DOUBLE) * CAST({1 << s} AS DOUBLE) / "
         f"CAST(__sum AS DOUBLE)"
@@ -1618,7 +1633,7 @@ def oracle_approx_distinct_hll_sql(
     return f"""
     WITH src AS ({source_sql}),
     t0 AS (
-      SELECT unnest({_hll_units_expr(text_col, n, 'duck')}) AS __t FROM src
+      SELECT unnest({units}) AS __t FROM src
     ),
     t AS (SELECT __t FROM t0 WHERE __t IS NOT NULL),
     hashed AS (

@@ -21,6 +21,8 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
+from streamtasks_spark.core.frames import local_frame
+
 
 def _dev_available(module: str) -> bool:
     try:  # pragma: no cover - capture libs absent in this environment
@@ -60,8 +62,8 @@ def audio_input(
         ]
     else:
         rows = list(_synthetic_audio(n_chunks, chunk_size))
-    return spark.createDataFrame(
-        rows, "ts double, samples array<double>"
+    return local_frame(
+        spark, rows, "ts double, samples array<double>"
     ).selectExpr("timestamp_seconds(ts) as ts", "samples")
 
 
@@ -95,8 +97,8 @@ def video_input(
             (float(i), [((i * n + p) % 17) / 16.0 for p in range(n)])
             for i in range(n_frames)
         ]
-    return spark.createDataFrame(
-        rows, "ts double, samples array<double>"
+    return local_frame(
+        spark, rows, "ts double, samples array<double>"
     ).selectExpr(
         "timestamp_seconds(ts) as ts", "samples",
         f"int({width}) as width", f"int({height}) as height",

@@ -31,6 +31,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from streamtasks_spark.core.frames import local_frame
 from streamtasks_spark.media.codec import pyav_available
 from streamtasks_spark.operators.timing import interleave_by_duration
 
@@ -38,6 +39,10 @@ PACKET_SCHEMA = (
     "track string, ts timestamp, seq bigint, duration double, "
     "data binary, is_keyframe boolean"
 )
+
+# a demuxed packet row as built on the driver: ``ts`` in float seconds,
+# converted by :func:`packet_frame`
+_PACKET_ROW_SCHEMA = PACKET_SCHEMA.replace("ts timestamp", "ts double")
 
 # container header sidecar: the stream-layout record that keeps an
 # EMPTY container readable (writer and reader must agree on the name)
@@ -120,7 +125,7 @@ def input_container(
         if header is None:
             raise
         schema = StructType.fromJson(header["schema"])
-        df = spark.createDataFrame([], schema)
+        df = local_frame(spark, [], schema)
     if tracks is None:
         tracks = [r["track"] for r in df.select("track").distinct().collect()]
     return {t: df.filter(F.col("track") == t) for t in tracks}
@@ -187,8 +192,7 @@ def demux_file_pyav(
             "av.open(url), iterate container.demux(), and build rows "
             "(track=stream.type+str(stream.index), ts=packet.pts*tb, "
             "seq=i, duration=packet.duration*tb, data=bytes(packet), "
-            "is_keyframe=packet.is_keyframe) → spark.createDataFrame(..., "
-            "PACKET_SCHEMA)."
+            "is_keyframe=packet.is_keyframe) → packet_frame(spark, rows)."
         )
     import av
 
@@ -208,4 +212,15 @@ def demux_file_pyav(
                     bool(packet.is_keyframe),
                 )
             )
-    return spark.createDataFrame(rows, PACKET_SCHEMA)
+    return packet_frame(spark, rows)
+
+
+def packet_frame(spark: SparkSession, rows) -> DataFrame:
+    """Demuxed packet rows ``(track, ts, seq, duration, data,
+    is_keyframe)``, ``ts`` in float seconds (``pts * time_base``), as a
+    :data:`PACKET_SCHEMA` packet table. A timestamp column accepts no
+    float, so ``ts`` lands as a double and ``timestamp_seconds``
+    converts it in the JVM, as the capture sources do."""
+    return local_frame(spark, rows, _PACKET_ROW_SCHEMA).withColumn(
+        "ts", F.timestamp_seconds("ts")
+    )

@@ -44,6 +44,20 @@ def exclude_generate_filter_inference(spark: SparkSession) -> None:
         )
 
 
+_MAX_DRIVER_MIB = 48 * 1024
+
+
+def default_driver_memory() -> str:
+    """The driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: half of
+    physical memory, capped at 48g. Local mode runs every executor
+    thread inside this one JVM, and a fixed 48g heap on a 15 GB host
+    let the bench grow past physical memory until the kernel killed
+    the driver; the other half is left to the JVM's off-heap use and
+    the Python side."""
+    phys_mib = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 20
+    return f"{min(_MAX_DRIVER_MIB, phys_mib // 2)}m"
+
+
 def get_spark(
     app_name: str = "streamtasks_spark",
     shuffle_partitions: int | None = None,
@@ -88,7 +102,10 @@ def get_spark(
         # task launches for every probe, even the selective ones).
         .config("spark.sql.limit.scaleUpFactor", "32")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         # timestamps in testdata are timezone-less; read them as-is
         .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
         .config("spark.sql.parquet.datetimeRebaseModeInRead", "CORRECTED")

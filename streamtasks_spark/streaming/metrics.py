@@ -27,6 +27,8 @@ from threading import Lock
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQueryListener
 
+from streamtasks_spark.core.frames import local_frame
+
 METRICS_SCHEMA = (
     "query_name string, query_id string, batch_id long, ts string, "
     "num_input_rows long, input_rows_per_sec double, "
@@ -97,4 +99,4 @@ def detach_metrics(spark: SparkSession, listener: QueryMetricsListener) -> None:
 
 def metrics_df(spark: SparkSession, listener: QueryMetricsListener) -> DataFrame:
     """The collected monitoring tail as a queryable DataFrame."""
-    return spark.createDataFrame(listener.snapshot(), METRICS_SCHEMA)
+    return local_frame(spark, listener.snapshot(), METRICS_SCHEMA)

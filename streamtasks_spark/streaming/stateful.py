@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import StructType
 
+from streamtasks_spark.core.frames import local_frame
 from streamtasks_spark.core.timeutil import ensure_event_time
 
 _PRIO_CONTROL, _PRIO_DATA = 0, 1
@@ -70,16 +71,6 @@ def _atomic_state_write(spark, rows, schema: str, path: str) -> None:
     from streamtasks_spark.core.state import replace_rows
 
     replace_rows(rows, StructType.fromDDL(schema), path)
-
-
-def _one_row(spark, **cols) -> DataFrame:
-    """A one-row frame of literal columns, built in the JVM on one
-    partition: ``createDataFrame([row])`` spreads a list over
-    defaultParallelism pickled slices, i.e. that many Python-worker
-    tasks (~0.28 s) to append one report row."""
-    return spark.range(0, 1, 1, 1).select(
-        *[F.lit(v).cast(t).alias(c) for c, (v, t) in cols.items()]
-    )
 
 
 def streaming_last_value_join(
@@ -1203,15 +1194,11 @@ def streaming_approx_distinct(
     MinHashIndex discipline.
 
     Returns the started StreamingQuery."""
-    from streamtasks_spark.llmdata.dedup import (
-        bounded_collect,
-        snapshot_read,
-        spread,
-        tokens_expr,
-    )
+    from streamtasks_spark.llmdata.dedup import bounded_collect, snapshot_read
     from streamtasks_spark.llmdata.textstats import (
         _hll_corrected_expr,
-        _hll_units_expr,
+        _hll_registers,
+        _hll_units,
     )
 
     if not (2 <= p <= 14):
@@ -1224,30 +1211,6 @@ def streaming_approx_distinct(
         else 0.5
     )
     am2 = alpha * m * m
-    h = "cast(conv(substring(md5(__t), 1, 12), 16, 10) as bigint)"
-
-    def _registers(batch: DataFrame) -> DataFrame:
-        return (
-            spread(batch, id_col)
-            .select(
-                F.explode(F.expr(_hll_units_expr(text_col, n, "spark")))
-                .alias("__t")
-            )
-            .filter(F.col("__t").isNotNull())
-            .select(
-                F.expr(f"pmod({h}, {m})").alias("__bucket"),
-                F.expr(f"cast(floor({h} / {m}) as bigint)").alias("__v"),
-            )
-            .select(
-                "__bucket",
-                F.expr(
-                    f"CASE WHEN __v = 0 THEN {s} "
-                    f"ELSE {w} - length(bin(__v)) + 1 END"
-                ).alias("__M"),
-            )
-            .groupBy("__bucket")
-            .agg(F.max("__M").alias("__M"))
-        )
 
     # Driver-side register cache (r12 — VERDICT r11 item 3): the merged
     # register file is sketch-BOUNDED (≤ 2^p rows) and the estimate was
@@ -1270,7 +1233,7 @@ def streaming_approx_distinct(
         if batch.isEmpty():
             return
         spark = batch.sparkSession
-        new = _registers(batch.select(id_col, text_col))
+        new = _hll_registers(_hll_units(batch, id_col, text_col, n), p)
         # ≤ m rows (register file): bound ENFORCED, not just argued
         rows_new = bounded_collect(
             new, m, "streaming_approx_distinct registers"
@@ -1303,9 +1266,9 @@ def streaming_approx_distinct(
         # decimal; ln must come from the same libm as approx_distinct_
         # hll's corrected_estimate), so the documented bit-equality to
         # the one-shot batch estimate holds by construction.
-        _one_row(
-            spark, batch_id=(batch_id, "long"),
-            n_buckets_hit=(n_hit, "long"), __est=(est, "double"),
+        local_frame(
+            spark, [(batch_id, n_hit, est)],
+            "batch_id bigint, n_buckets_hit bigint, __est double",
         ).select(
             "batch_id",
             "n_buckets_hit",
@@ -1456,10 +1419,9 @@ def streaming_heavy_hitters(
             )
             for j in range(depth)
         )
-        _one_row(
-            spark, batch_id=(batch_id, "long"),
-            token_total=(total, "long"),
-            n_heavy_cells=(n_heavy_cells, "long"),
+        local_frame(
+            spark, [(batch_id, total, n_heavy_cells)],
+            "batch_id bigint, token_total bigint, n_heavy_cells bigint",
         ).write.mode("append").parquet(reports_path)
 
     return (
@@ -1615,8 +1577,9 @@ def streaming_cluster_prune(
     def _judge(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
-        cents = batch.sparkSession.createDataFrame(
-            centroids_rows, "__cell int, __cv array<double>, __cn double"
+        cents = local_frame(
+            batch.sparkSession, centroids_rows,
+            "__cell int, __cv array<double>, __cn double",
         )
         out = cluster_prune_frozen(
             batch.select(id_col, vec_col),
